@@ -102,6 +102,7 @@ def _write(args: argparse.Namespace, spark: SparkSession, df: DataFrame) -> None
 def build_pipeline(args: argparse.Namespace, spark: SparkSession):
     """The reference DAG shape as a scheduler-agnostic Pipeline:
     sense → (ddl +) compute+write, with task-level retries."""
+    from etl_platform_nyc_taxi_spark.plans.quality import observed_metrics
     from etl_platform_nyc_taxi_spark.plans.runner import Pipeline, Step, wait_for
 
     import glob as _glob
@@ -112,9 +113,12 @@ def build_pipeline(args: argparse.Namespace, spark: SparkSession):
         )
 
     def run_job() -> int:
-        df = _compute(args, spark)
+        # The row count is observed during the write, not re-counted by a
+        # second execution. A fresh Observation per attempt: one can be
+        # attached to a DataFrame only once, so a retry must not reuse it.
+        df, obs = observed_metrics(_compute(args, spark))
         _write(args, spark, df)
-        return df.count()
+        return obs.get["n_rows"]
 
     return Pipeline(
         # '_' not '@': pipeline.name doubles as the Airflow dag_id via

@@ -7,7 +7,9 @@ JDBC append.
 
 Engine corrections (SURVEY.md §2.9):
   C2  no collect-then-rebuild — audit column added in-plan;
-  C3  zero-fill preserved (empty day ⇒ a ``(day, 0)`` row) without collect;
+  C3  zero-fill preserved (empty day ⇒ a ``(day, 0)`` row) without collect:
+      a global aggregate returns exactly one row by construction, so no
+      day anchor, join or broadcast is needed;
   D2  sink is idempotent upsert, not bare append;
   D4  UTC pinned by the session layer;
   §4  the day filter is a raw timestamp range (sargable → parquet row-group
@@ -23,7 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_platform_nyc_taxi_spark.functions.dates import derive_date, ts_on_date
-from etl_platform_nyc_taxi_spark.plans.quality import zero_fill_date
 
 
 def daily_counts(
@@ -52,26 +53,23 @@ def daily_transactions(
     """Single-day count with zero-fill and audit timestamp — the corrected
     reference job 1, one Catalyst plan, no driver round-trips.
 
-    Plan: pruned scan (ts range pushed to parquet) → partial/final count →
-    broadcast left-join against the 1-row day anchor (zero-fill) →
-    audit projection. Output schema matches the reference's
+    Plan: pruned scan (ts range pushed to parquet) → global count →
+    literal day + audit projection. Output schema matches the reference's
     ``daily_transaction`` table contract.
     """
     day = dt.date.fromisoformat(day) if isinstance(day, str) else day
-    agg = (
+    out = (
         df.filter(ts_on_date(ts_col, day, df=df))
-        .select(F.lit(day).alias(date_name))
-        .groupBy(date_name)
         .agg(F.count(F.lit(1)).alias(count_name))
+        .select(F.lit(day).alias(date_name), count_name)
     )
-    out = zero_fill_date(agg, date_name, count_name, day)
     # C4 sanity parity note: the reference asserts count >= 0 here. That
     # check is vacuous by construction (the column comes from F.count,
-    # always >= 0, coalesced with 0) and require_nonnegative runs an
-    # EAGER action — it executed the whole pruned-scan→agg→join plan at
-    # build time, doubling the job (code-review r7). The assertion stays
-    # available in plans/quality.py for genuinely-unknown inputs and is
-    # pytest-proven there; this hot path keeps its one-plan contract.
+    # always >= 0) and require_nonnegative runs an EAGER action — it
+    # would execute the whole plan at build time, doubling the job. The
+    # assertion stays available in plans/quality.py for genuinely-unknown
+    # inputs and is pytest-proven there; this hot path keeps its one-plan
+    # contract.
     if audit:
         out = out.withColumn("calculated_at", F.current_timestamp())
     return out

@@ -8,8 +8,6 @@ collect-then-rebuild anti-patterns.
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,18 +33,6 @@ def require_nonnegative(df: DataFrame, col: str) -> DataFrame:
     if bad:
         raise DataQualityError(f"negative value in column {col!r}")
     return df
-
-
-def zero_fill_date(df: DataFrame, date_col: str, count_col: str, day: dt.date) -> DataFrame:
-    """C3: ensure exactly-one row per requested day — an empty aggregate
-    becomes ``(day, 0)``. Expressed as a left join from a 1-row anchor
-    (broadcast, no collect), keeping everything in one Catalyst plan."""
-    spark = df.sparkSession
-    anchor = spark.createDataFrame([(day,)], f"{date_col} date")
-    return (
-        anchor.join(F.broadcast(df), on=date_col, how="left")
-        .withColumn(count_col, F.coalesce(F.col(count_col), F.lit(0).cast("long")))
-    )
 
 
 def quality_report(

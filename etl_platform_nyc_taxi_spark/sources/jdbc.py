@@ -346,11 +346,16 @@ def table_exists(spark: SparkSession, cfg: JdbcConfig, table: str) -> bool:
 def ensure_table(
     spark: SparkSession, cfg: JdbcConfig, table: str, columns_ddl: str
 ) -> None:
-    """Dialect-portable CREATE-IF-ABSENT: plain ``CREATE TABLE`` and, on
-    failure, accept the state only if the table exists (``IF NOT EXISTS``
-    is not universal — Derby, used by the in-sandbox e2e tests, lacks it).
-    Quote column names in ``columns_ddl`` so case-sensitive dialects match
-    Spark's quoted-identifier INSERTs."""
+    """Dialect-portable CREATE-IF-ABSENT (``IF NOT EXISTS`` is not
+    universal — Derby, used by the embedded e2e tests, lacks it): probe
+    with :func:`table_exists` and run plain ``CREATE TABLE`` only when the
+    table is absent, so the steady state costs one connection and no
+    failed statement. A failed ``CREATE`` is accepted only if the table
+    exists on a re-probe (a concurrent creator won the race). Quote column
+    names in ``columns_ddl`` so case-sensitive dialects match Spark's
+    quoted-identifier INSERTs."""
+    if table_exists(spark, cfg, table):
+        return
     try:
         execute_statement(spark, cfg, f"CREATE TABLE {table} ({columns_ddl})")
     except Exception:

@@ -93,6 +93,94 @@ def test_cli_jdbc_sink_upsert_idempotent(spark, trip_data, tmp_path):
     assert len(got) == 1 and got[0]["total_transactions"] == 3
 
 
+def _jobs_in_group(spark, group, fn) -> int:
+    """Spark jobs ``fn`` starts, counted through a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # deliver job events
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "job, ds, most", [("daily_transactions", "2024-06-01", 3), ("top_zones", "2024-06-02", 4)]
+)
+def test_cli_run_executes_its_plan_once(spark, trip_data, tmp_path, job, ds, most):
+    """A warm run executes its plan once: the row count is observed during
+    the write (no post-write ``count()``) and the daily zero-fill is a
+    global aggregate (no day-anchor job). A post-write count plus a
+    broadcast anchor took 8 jobs per daily run and 7 per top-zones run."""
+    argv = _argv(job, ds, trip_data, str(tmp_path / "out"), "t")
+    assert main(argv, spark=spark) == 0  # warm-up
+    n = _jobs_in_group(spark, f"{job}-{tmp_path.name}", lambda: main(argv, spark=spark))
+    assert 1 <= n <= most
+
+
+def _read_back(spark, sink, table):
+    if sink.startswith("jdbc:"):
+        from etl_platform_nyc_taxi_spark.__main__ import _infer_driver
+        from etl_platform_nyc_taxi_spark.sources.jdbc import JdbcConfig, read_jdbc
+
+        return read_jdbc(spark, JdbcConfig(url=sink, driver=_infer_driver(sink)), table)
+    return spark.read.parquet(f"{sink}/{table}")
+
+
+@pytest.mark.parametrize(
+    "job, ds, sink_kind, extra, want",
+    [
+        ("daily_transactions", "2024-06-01", "parquet", (), 1),
+        ("daily_transactions", "2024-07-15", "parquet", (), 1),  # zero-fill
+        ("daily_transactions", "2024-06-01", "jdbc", (), 1),
+        # zones 7 and 132 tie at rank 1: k=1 keeps two rows
+        ("top_zones", "2024-06-02", "parquet", ("-k", "1"), 2),
+        ("top_zones", "2024-06-02", "jdbc", ("-k", "1"), 2),
+        ("top_zones", "2024-05-01", "parquet", (), 0),  # nothing before cutoff
+    ],
+)
+def test_cli_printed_rows_match_written(
+    spark, trip_data, tmp_path, capsys, job, ds, sink_kind, extra, want
+):
+    sink = (
+        f"jdbc:derby:{tmp_path}/rowsdb;create=true"
+        if sink_kind == "jdbc"
+        else str(tmp_path / "out")
+    )
+    assert main(_argv(job, ds, trip_data, sink, "t", *extra), spark=spark) == 0
+    written = _read_back(spark, sink, "t").count()
+    assert written == want
+    assert f"-> t: {written} row(s)" in capsys.readouterr().out
+
+
+def test_build_pipeline_retry_counts_with_a_fresh_observation(
+    spark, trip_data, tmp_path, monkeypatch
+):
+    """The first attempt writes (filling its observation) and then fails;
+    the retry must build a new observation — reusing one raises — and
+    return the retried write's row count."""
+    from etl_platform_nyc_taxi_spark import __main__ as cli
+
+    real_write, calls = cli._write, []
+
+    def write_then_fail_once(args, spark_, df):
+        real_write(args, spark_, df)
+        calls.append(df)
+        if len(calls) == 1:
+            raise RuntimeError("transient sink failure")
+
+    monkeypatch.setattr(cli, "_write", write_then_fail_once)
+    args = parse_args(
+        _argv("top_zones", "2024-06-02", trip_data, str(tmp_path / "out"), "t",
+              "-k", "1", "--retries", "1", "--retry-delay", "0")
+    )
+    results = cli.build_pipeline(args, spark).run()
+    assert len(calls) == 2 and calls[0] is not calls[1]
+    assert results["compute_and_write"] == 2
+    assert spark.read.parquet(str(tmp_path / "out" / "t")).count() == 2
+
+
 def test_cli_sensor_times_out_on_missing_input(spark, tmp_path):
     from etl_platform_nyc_taxi_spark.plans.runner import SensorTimeout
 

@@ -45,6 +45,30 @@ def test_daily_transactions_zero_fill(trips):
     assert out[0]["total_transactions"] == 0
 
 
+def test_daily_transactions_plan_shape_and_schema(spark, trips, tmp_path):
+    """C2/C3 in one plan: the zero-fill is a global aggregate, so the
+    physical plan holds no join, no broadcast and no driver-built RDD."""
+    src = str(tmp_path / "trips")
+    trips.write.parquet(src)
+    out = daily_transactions(spark.read.parquet(src), "2024-01-01")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("BroadcastHashJoin", "BroadcastNestedLoopJoin",
+                 "BroadcastExchange", "Scan ExistingRDD"):
+        assert node not in plan, node
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("transaction_date", "date"),
+        ("total_transactions", "bigint"),
+        ("calculated_at", "timestamp"),
+    ]
+    assert out.collect()[0]["total_transactions"] == 2
+
+
+def test_daily_transactions_zero_row_input(spark):
+    empty = spark.createDataFrame([], "pickup_datetime timestamp")
+    out = daily_transactions(empty, "2024-06-01", audit=False).collect()
+    assert [tuple(r) for r in out] == [(dt.date(2024, 6, 1), 0)]
+
+
 def test_daily_transactions_audit_column(trips):
     out = daily_transactions(trips, "2024-01-01").collect()[0]
     assert out["calculated_at"] is not None
