@@ -104,13 +104,10 @@ def build_pipeline(args: argparse.Namespace, spark: SparkSession):
     sense → (ddl +) compute+write, with task-level retries."""
     from etl_platform_nyc_taxi_spark.plans.quality import observed_metrics
     from etl_platform_nyc_taxi_spark.plans.runner import Pipeline, Step, wait_for
-
-    import glob as _glob
+    from etl_platform_nyc_taxi_spark.sources.parquet import list_parquet_files
 
     def sense() -> bool:
-        return bool(_glob.glob(os.path.join(args.data_path, "*.parquet"))) or (
-            os.path.isfile(args.data_path)
-        )
+        return bool(list_parquet_files(args.data_path))
 
     def run_job() -> int:
         # The row count is observed during the write, not re-counted by a

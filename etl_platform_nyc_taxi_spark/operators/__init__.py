@@ -6,15 +6,9 @@ is the anti-pattern this design eliminates.
 """
 
 from etl_platform_nyc_taxi_spark.operators.core import (
-    project,
-    filter_rows,
-    derive_columns,
     aggregate,
-    distinct_rows,
     union_all,
     union_by_name,
-    sort_rows,
-    limit_rows,
 )
 from etl_platform_nyc_taxi_spark.operators.windows import (
     ranked,
@@ -31,15 +25,9 @@ from etl_platform_nyc_taxi_spark.operators.joins import (
 )
 
 __all__ = [
-    "project",
-    "filter_rows",
-    "derive_columns",
     "aggregate",
-    "distinct_rows",
     "union_all",
     "union_by_name",
-    "sort_rows",
-    "limit_rows",
     "ranked",
     "top_k_by_count",
     "top_k_per_group",

@@ -1,9 +1,11 @@
-"""Core relational operators (SURVEY.md §2.2 P1-P6, §2.4 A1-A2, §2.6-2.7).
+"""Core relational operators (SURVEY.md §2.4 A1-A2, §2.7 U1).
 
-Thin, typed wrappers over the DataFrame API. They exist to give pipelines a
-uniform operator vocabulary (and a single place for scale discipline), not
-to hide Spark — every call constructs the exact Catalyst node you'd write
-by hand, so pushdown/pruning/codegen behave identically.
+Typed helpers over the DataFrame API for the shapes that need more than one
+call (grouping modes, n-ary unions, skew-salted aggregation); every call
+constructs the exact Catalyst node you'd write by hand, so
+pushdown/pruning/codegen behave identically. Single-call operators
+(select, filter, withColumns, distinct, orderBy, limit) are used directly
+on the DataFrame.
 """
 
 from __future__ import annotations
@@ -13,23 +15,6 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def project(df: DataFrame, *cols: str | Column) -> DataFrame:
-    """P5/P6: column projection/rename; aliases belong on the Columns."""
-    return df.select(*cols)
-
-
-def filter_rows(df: DataFrame, predicate: Column | str) -> DataFrame:
-    """P2/P3/P4: row filter. Build date predicates with
-    ``functions.dates`` so they stay sargable (pushdown-friendly)."""
-    return df.filter(predicate)
-
-
-def derive_columns(df: DataFrame, **named: Column) -> DataFrame:
-    """P1: add derived columns (single ``withColumns`` call — one
-    projection node, not one per column)."""
-    return df.withColumns(dict(named))
 
 
 def aggregate(
@@ -58,13 +43,6 @@ def aggregate(
     return grouping(*keys).agg(*exprs)
 
 
-def distinct_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """DISTINCT / dropDuplicates. With ``subset``, keeps an arbitrary row
-    per key (shuffle on the subset) — deterministic winners need
-    ``top_k_per_group`` with a total order instead."""
-    return df.dropDuplicates(subset) if subset else df.distinct()
-
-
 def union_all(*dfs: DataFrame) -> DataFrame:
     """U1: positional bag union (reference semantics:
     dags/spark_jobs/calculate_top_taxi_zones.py:77-79). Prefer a single
@@ -82,23 +60,6 @@ def union_by_name(*dfs: DataFrame, allow_missing: bool = False) -> DataFrame:
     return reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=allow_missing), dfs
     )
-
-
-def sort_rows(df: DataFrame, *order: Column | str) -> DataFrame:
-    """O1: total sort (range-partitioned exchange). Display/write ordering
-    only — engine correctness never depends on row order."""
-    return df.orderBy(*order)
-
-
-def limit_rows(df: DataFrame, n: int) -> DataFrame:
-    """LIMIT n (local limit per partition → single-partition global limit).
-    Row choice is nondeterministic without a preceding total sort."""
-    return df.limit(n)
-
-
-def count_star(name: str = "cnt") -> Column:
-    """P6: ``count(*)`` aliased (the only agg the reference uses)."""
-    return F.count(F.lit(1)).alias(name)
 
 
 def _hashable_salt_cols(df: DataFrame) -> list[str]:

@@ -1,71 +1,17 @@
-"""Canonical schemas + schema-drift resolution.
+"""Driver-fixture table names.
 
-The reference handles schema in two modes (SURVEY.md §1.3):
-  * job 1 declares an explicit 24-column StructType and forces it onto the
-    scan (reference: dags/spark_jobs/calculate_daily_transactions.py:19-46,50);
-  * job 2 probes each file's footer and re-reads with the harvested schema
-    (reference: dags/spark_jobs/calculate_top_taxi_zones.py:21-27).
-
-This module is the single source of truth for the canonical trip schema and
-the driver-fixture schemas, plus a drift resolver that subsumes both modes.
+The reference handles trip schema in two modes (SURVEY.md §1.3): job 1
+forces an explicit 24-column StructType onto the scan
+(reference: dags/spark_jobs/calculate_daily_transactions.py:19-46,50) and
+job 2 probes each file's footer and re-reads with the harvested schema
+(reference: dags/spark_jobs/calculate_top_taxi_zones.py:21-27). The engine
+subsumes both with one ``mergeSchema`` scan
+(``sources.parquet.read_parquet_auto``), which resolves drift across file
+generations by field name; a caller that must impose a schema uses
+``spark.read.schema(s).parquet(p)``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# Canonical NYC HVFHV trip schema — 24 columns, all nullable, mirroring the
-# reference's explicit StructType (calculate_daily_transactions.py:19-46).
-# ---------------------------------------------------------------------------
-HVFHV_TRIP_SCHEMA = T.StructType(
-    [
-        T.StructField("hvfhs_license_num", T.StringType(), True),
-        T.StructField("dispatching_base_num", T.StringType(), True),
-        T.StructField("originating_base_num", T.StringType(), True),
-        T.StructField("request_datetime", T.TimestampType(), True),
-        T.StructField("on_scene_datetime", T.TimestampType(), True),
-        T.StructField("pickup_datetime", T.TimestampType(), True),
-        T.StructField("dropoff_datetime", T.TimestampType(), True),
-        T.StructField("PULocationID", T.LongType(), True),
-        T.StructField("DOLocationID", T.LongType(), True),
-        T.StructField("trip_miles", T.DoubleType(), True),
-        T.StructField("trip_time", T.LongType(), True),
-        T.StructField("base_passenger_fare", T.DoubleType(), True),
-        T.StructField("tolls", T.DoubleType(), True),
-        T.StructField("bcf", T.DoubleType(), True),
-        T.StructField("sales_tax", T.DoubleType(), True),
-        T.StructField("congestion_surcharge", T.DoubleType(), True),
-        T.StructField("airport_fee", T.DoubleType(), True),
-        T.StructField("tips", T.DoubleType(), True),
-        T.StructField("driver_pay", T.DoubleType(), True),
-        T.StructField("shared_request_flag", T.StringType(), True),
-        T.StructField("shared_match_flag", T.StringType(), True),
-        T.StructField("access_a_ride_flag", T.StringType(), True),
-        T.StructField("wav_request_flag", T.StringType(), True),
-        T.StructField("wav_match_flag", T.StringType(), True),
-    ]
-)
-
-#: Output contract of the daily-transactions pipeline
-#: (reference DDL: dags/daily_transactions_dag.py:34-40).
-DAILY_TRANSACTION_SCHEMA = T.StructType(
-    [
-        T.StructField("transaction_date", T.DateType(), False),
-        T.StructField("total_transactions", T.LongType(), False),
-        T.StructField("calculated_at", T.TimestampType(), False),
-    ]
-)
-
-#: Output contract of the top-zones pipeline
-#: (reference DDL: dags/daily_topfive_taxi_zone_dag.py:34-40).
-TOPFIVE_TAXI_ZONE_SCHEMA = T.StructType(
-    [
-        T.StructField("taxi_zone_id", T.LongType(), False),
-        T.StructField("rank", T.IntegerType(), False),
-        T.StructField("calculated_at", T.TimestampType(), False),
-    ]
-)
 
 #: Driver fixture tables (FIXTURES.md §B) available at
 #: /root/testdata/sf{0.001,0.01,0.1}/<name>.parquet.
@@ -81,23 +27,3 @@ FIXTURE_TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def merge_schemas(*schemas: T.StructType) -> T.StructType:
-    """Resolve schema drift across file generations by name.
-
-    Mirrors what ``spark.sql.parquet.mergeSchema=true`` does at scan time
-    (the reference's drift strategy for job 1) but materialized as an
-    explicit StructType so callers can impose one canonical schema on a
-    heterogeneous directory. Later schemas win on type conflicts; the field
-    set is the union in first-seen order. All merged fields are nullable
-    (a file missing the column yields NULLs).
-    """
-    fields: dict[str, T.StructField] = {}
-    order: list[str] = []
-    for schema in schemas:
-        for f in schema.fields:
-            if f.name not in fields:
-                order.append(f.name)
-            fields[f.name] = T.StructField(f.name, f.dataType, True)
-    return T.StructType([fields[n] for n in order])

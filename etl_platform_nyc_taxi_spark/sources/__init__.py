@@ -1,12 +1,8 @@
-"""Sources & sinks: parquet scans/probes, local rows, fixture loader, JDBC."""
+"""Sources & sinks: parquet listing, local rows, fixture loader, JDBC."""
 
 from etl_platform_nyc_taxi_spark.sources.parquet import (
     list_parquet_files,
-    read_parquet,
-    read_parquet_dir,
-    probe_schema,
     load_fixture,
-    load_fixtures,
 )
 from etl_platform_nyc_taxi_spark.sources.rows import rows_source
 from etl_platform_nyc_taxi_spark.sources.jdbc import (
@@ -19,11 +15,7 @@ from etl_platform_nyc_taxi_spark.sources.jdbc import (
 
 __all__ = [
     "list_parquet_files",
-    "read_parquet",
-    "read_parquet_dir",
-    "probe_schema",
     "load_fixture",
-    "load_fixtures",
     "rows_source",
     "JdbcConfig",
     "read_jdbc",

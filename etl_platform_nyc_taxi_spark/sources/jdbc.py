@@ -101,34 +101,19 @@ def delete_where_sql(table: str, predicate: str) -> str:
     return f"DELETE FROM {table} WHERE {predicate}"
 
 
-def execute_statement(spark: SparkSession, cfg: JdbcConfig, sql: str) -> None:
-    """Run one DDL/DML statement on the target database via the JVM driver.
+def execute_statement(spark: SparkSession, cfg: JdbcConfig, *sqls: str) -> None:
+    """Run DDL/DML statements on the target database as ONE transaction
+    (autocommit off, explicit commit; rollback on any failure) via the
+    JVM driver. A single statement committed explicitly behaves as under
+    autocommit; several make e.g. the staged upsert's DELETE+INSERT
+    atomic — a crash between the two can no longer leave the key window
+    deleted-but-not-reinserted, and no reader observes the half-applied
+    state.
 
     Uses java.sql.DriverManager through the Py4J gateway — no extra Python
     DB client needed; the JDBC driver jar is already on the Spark classpath
     for the read/write paths.
     """
-    jvm = spark._jvm  # noqa: SLF001 — sanctioned Py4J escape hatch
-    jvm.java.lang.Class.forName(cfg.driver)
-    conn = jvm.java.sql.DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
-    try:
-        stmt = conn.createStatement()
-        try:
-            stmt.execute(sql)
-        finally:
-            stmt.close()
-    finally:
-        conn.close()
-
-
-def execute_statements_txn(
-    spark: SparkSession, cfg: JdbcConfig, sqls: list[str]
-) -> None:
-    """Run several DML statements as ONE transaction (autocommit off,
-    explicit commit; rollback on any failure). This is what makes the
-    staged upsert's DELETE+INSERT atomic: a crash between the two can no
-    longer leave the key window deleted-but-not-reinserted until a replay
-    heals it, and a reader never observes the half-applied state."""
     jvm = spark._jvm  # noqa: SLF001 — sanctioned Py4J escape hatch
     jvm.java.lang.Class.forName(cfg.driver)
     conn = jvm.java.sql.DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
@@ -180,7 +165,7 @@ def staged_upsert_sqls(
     table: str, stage: str, key_cols: list[str], cols: list[str]
 ) -> list[str]:
     """The staged upsert's DELETE+INSERT statement pair (one transaction
-    via :func:`execute_statements_txn`). Exposed so the dialect tests
+    via :func:`execute_statement`). Exposed so the dialect tests
     can run the EXACT statements against real engines (Derby in
     tests/test_jdbc_e2e.py; real Postgres in tests/test_postgres_real.py
     when the server binaries are present). Key match is null-safe."""
@@ -227,7 +212,7 @@ def write_jdbc_upsert_staged(
     ``VARCHAR(string_key_width)`` on the staging write (Derby's default
     StringType mapping is CLOB, which its ``=`` operator rejects).
     DELETE and INSERT run in ONE transaction
-    (:func:`execute_statements_txn`), so no reader or crash window ever
+    (:func:`execute_statement`), so no reader or crash window ever
     sees the key window deleted without its replacement rows.
 
     The staging name must be unique per writer: by default a random
@@ -257,9 +242,7 @@ def write_jdbc_upsert_staged(
         stage = f"{table}_stg_{batch_id:x}"
     else:
         stage = f"{table}_stg_{uuid.uuid4().hex[:10]}"
-    writer = df.coalesce(cfg.num_partitions).write.format("jdbc").options(
-        dbtable=stage, **cfg.options()
-    )
+    writer = _writer(df, cfg, stage)
     string_keys = [
         f.name
         for f in df.schema.fields
@@ -277,10 +260,8 @@ def write_jdbc_upsert_staged(
     # frame's schema — also what makes a replayed batch start clean.
     writer.mode("overwrite").save()
     try:
-        execute_statements_txn(
-            spark,
-            cfg,
-            staged_upsert_sqls(table, stage, key_cols, df.columns),
+        execute_statement(
+            spark, cfg, *staged_upsert_sqls(table, stage, key_cols, df.columns)
         )
     finally:
         try:

@@ -5,11 +5,13 @@ multi-file Catalyst scan instead of the reference's driver-side per-file
 loop (reference: dags/spark_jobs/calculate_top_taxi_zones.py:37-40,69-79 —
 anti-pattern C5/D1):
 
-  * S1 glob scan with an imposed explicit schema
-    (calculate_daily_transactions.py:48-50)
-  * S2/S3 schema-probe + re-read with the harvested schema
-    (calculate_top_taxi_zones.py:21-27)
-  * S4 file discovery (calculate_top_taxi_zones.py:37-40)
+  * S1/S2 glob or single-file scan: :func:`read_parquet_auto` takes a
+    file, a directory or a glob (calculate_daily_transactions.py:48-50);
+    an imposed schema is Spark's own ``spark.read.schema(s).parquet(p)``
+  * S3 schema probe: ``read_parquet_auto(spark, f).schema`` reads footers
+    only (calculate_top_taxi_zones.py:21-27)
+  * S4 file discovery: :func:`list_parquet_files`
+    (calculate_top_taxi_zones.py:37-40)
 
 At 100 TB the per-file loop is fatal (one Spark job per file, no cross-file
 parallelism, N× scheduling overhead); a single ``spark.read.parquet(dir)``
@@ -24,51 +26,23 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
-def list_parquet_files(data_path: str, pattern: str = "*.parquet") -> list[str]:
-    """S4: enumerate parquet files under a directory (sorted, deterministic).
+def list_parquet_files(path: str) -> list[str]:
+    """S4: the parquet files ``path`` names, sorted — a directory's
+    ``*.parquet`` entries, a file itself, or a glob's matches (``[]`` when
+    nothing matches). A literal file is checked before the glob, so a name
+    holding glob characters is never reinterpreted as a pattern.
 
     Driver-side listing is only for orchestration decisions (sensing,
-    logging, per-file lineage); the scan itself should pass the directory or
-    glob to Spark so listing happens in parallel on the cluster.
+    footer probes); the scan itself passes ``path`` to Spark so listing
+    happens in parallel on the cluster.
     """
-    return sorted(_glob.glob(os.path.join(data_path, pattern)))
-
-
-def probe_schema(spark: SparkSession, path: str) -> T.StructType:
-    """S3: footer-only schema inference of one parquet file/dir."""
-    return spark.read.parquet(path).schema
-
-
-def read_parquet(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    merge_schema: bool = True,
-) -> DataFrame:
-    """S1/S2: scan parquet file(s), optionally imposing an explicit schema.
-
-    ``path`` may be a file, a directory, or a glob — Spark parallelizes the
-    listing and the scan. With ``schema`` given, footer sampling is skipped
-    (scan-setup win on wide directories); with ``merge_schema``, drift
-    across file generations resolves by field name.
-    """
-    reader = spark.read.option("mergeSchema", str(merge_schema).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
-def read_parquet_dir(
-    spark: SparkSession,
-    data_path: str,
-    pattern: str = "*.parquet",
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """S1: glob scan (reference parity for ``fhvhv_tripdata_*.parquet``)."""
-    return read_parquet(spark, os.path.join(data_path, pattern), schema=schema)
+    if os.path.isdir(path):
+        return sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    if os.path.isfile(path):
+        return [path]
+    return sorted(_glob.glob(path))
 
 
 #: Footer-probe budget for schema-drifted directories: a nanos column
@@ -91,11 +65,8 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
         import pyarrow as pa
     except ImportError:
         return []
-    candidates = sorted(_glob.glob(os.path.join(path, "*.parquet"))) if os.path.isdir(path) else [path]
-    if not candidates:
-        return []
     cols: set[str] = set()
-    for f in candidates[:_NANOS_PROBE_MAX_FILES]:
+    for f in list_parquet_files(path)[:_NANOS_PROBE_MAX_FILES]:
         try:
             schema = pq.read_schema(f)
         except Exception:
@@ -168,24 +139,15 @@ def load_fixture(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return read_parquet_auto(spark, os.path.join(sf_dir, f"{table}.parquet"))
 
 
-def load_fixtures(spark: SparkSession, sf_dir: str, *tables: str) -> dict[str, DataFrame]:
-    """Load several fixture tables at once; returns name → DataFrame."""
-    return {t: load_fixture(spark, sf_dir, t) for t in tables}
-
-
 def parquet_num_rows(path: str) -> int | None:
-    """Footer-only total row count of a parquet file/dir (driver-side, no
-    scan — the count ships in every footer). None when pyarrow is missing
-    or no footers are found."""
+    """Footer-only total row count of a parquet file/dir/glob (driver-side,
+    no scan — the count ships in every footer). None when pyarrow is
+    missing or no footers are found."""
     try:
         import pyarrow.parquet as pq
     except ImportError:
         return None
-    files = (
-        sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else sorted(_glob.glob(path))
-    )
+    files = list_parquet_files(path)
     if not files:
         return None
     try:

@@ -19,21 +19,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_platform_nyc_taxi_spark.schema import FIXTURE_TABLES
 from etl_platform_nyc_taxi_spark.sources.parquet import load_fixture
-
-#: All driver fixture tables (TESTDATA.md).
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 # Session -> registered sf_dir. Weak keys: a dead session's entry vanishes
 # with it (id()-keying would let CPython recycle the id for a NEW session

@@ -92,16 +92,6 @@ def keys_predicate(keys, key_cols: list[str]) -> str | None:
     return " OR ".join(terms)
 
 
-def batch_key_predicate(batch: DataFrame, key_cols: list[str]) -> str | None:
-    """Literal predicate covering the batch's distinct keys; None for an
-    empty batch. The distinct collect is bounded by the aggregate
-    contract above (keys per micro-batch, not rows). For batches whose
-    key count exceeds :data:`DEFAULT_STAGING_KEY_THRESHOLD`, prefer
-    :func:`upsert_via_staging` — an O(keys) SQL string is a driver- and
-    parser-side scale cliff."""
-    return keys_predicate(batch.select(*key_cols).distinct().collect(), key_cols)
-
-
 #: Batch-generic staging upsert lives with the other JDBC sinks
 #: (sources/jdbc.write_jdbc_upsert_staged); re-exported here because the
 #: streaming sink is its primary consumer.

@@ -49,6 +49,21 @@ def test_cli_daily_transactions_parquet_sink(spark, trip_data, tmp_path):
     assert got[0]["calculated_at"] is not None
 
 
+def test_cli_daily_transactions_glob_data_path(spark, trip_data, tmp_path):
+    """``data_path`` may be a glob: the sensor fires on its matches."""
+    out = str(tmp_path / "out")
+    rc = main(
+        _argv("daily_transactions", "2024-06-01", f"{trip_data}/*.parquet", out,
+              "daily_transaction"),
+        spark=spark,
+    )
+    assert rc == 0
+    got = spark.read.parquet(f"{out}/daily_transaction").collect()
+    assert [(r["transaction_date"], r["total_transactions"]) for r in got] == [
+        (dt.date(2024, 6, 1), 3)
+    ]
+
+
 def test_cli_daily_transactions_zero_fill(spark, trip_data, tmp_path):
     """C3: a day with no rows still lands a (day, 0) row."""
     out = str(tmp_path / "out")

@@ -106,9 +106,17 @@ def test_overwrite_truncate_pk_still_enforced(spark, cfg):
 
 
 def test_ddl_statement_roundtrip(spark, cfg):
-    """S8: arbitrary DDL/DML through execute_statement."""
+    """S8: arbitrary DDL/DML through execute_statement. Each call is one
+    transaction: a single statement is committed, and a failing statement
+    rolls back the ones before it."""
     execute_statement(spark, cfg, 'CREATE TABLE t8 ("x" INTEGER)')
     execute_statement(spark, cfg, "INSERT INTO t8 VALUES (42)")
+    got = read_jdbc(spark, cfg, "t8").collect()
+    assert [r["x"] for r in got] == [42]
+    with pytest.raises(Exception):
+        execute_statement(
+            spark, cfg, "INSERT INTO t8 VALUES (7)", "INSERT INTO no_such_table VALUES (1)"
+        )
     got = read_jdbc(spark, cfg, "t8").collect()
     assert [r["x"] for r in got] == [42]
 

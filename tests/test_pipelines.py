@@ -1,5 +1,5 @@
 """Pipeline semantics: zero-fill, D1 per-file-vs-global deviation pinned,
-quality guards, schema merge."""
+quality guards."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from etl_platform_nyc_taxi_spark.plans.daily_transactions import (
     daily_counts,
@@ -19,7 +18,6 @@ from etl_platform_nyc_taxi_spark.plans.quality import (
     require_nonnegative,
 )
 from etl_platform_nyc_taxi_spark.plans.top_zones import top_k_zones, top_k_zones_perfile
-from etl_platform_nyc_taxi_spark.schema import merge_schemas
 
 
 def test_daily_counts_all_days(trips):
@@ -110,16 +108,6 @@ def test_require_nonnegative(spark):
     df = spark.createDataFrame([(1,), (-2,)], "v int")
     with pytest.raises(DataQualityError, match="negative"):
         require_nonnegative(df, "v")
-
-
-def test_merge_schemas_union_and_conflict():
-    a = T.StructType([T.StructField("x", T.IntegerType()), T.StructField("y", T.StringType())])
-    b = T.StructType([T.StructField("y", T.StringType()), T.StructField("z", T.DoubleType())])
-    c = T.StructType([T.StructField("x", T.LongType())])  # widened in a later generation
-    merged = merge_schemas(a, b, c)
-    assert [f.name for f in merged.fields] == ["x", "y", "z"]
-    assert merged["x"].dataType == T.LongType()  # later schema wins
-    assert all(f.nullable for f in merged.fields)
 
 
 def test_quality_report_counts_and_fk(spark):

@@ -15,9 +15,7 @@ from etl_platform_nyc_taxi_spark.sources.jdbc import (
 )
 from etl_platform_nyc_taxi_spark.sources.parquet import (
     list_parquet_files,
-    probe_schema,
     read_parquet_auto,
-    read_parquet_dir,
 )
 
 
@@ -57,17 +55,56 @@ def test_fixture_loader_matches_duckdb_values(spark):
     assert (smin, smax) == (omin, omax)
 
 
+def test_nanos_parquet_glob_restores_timestamps(spark, tmp_path):
+    """A glob path gets the same TIMESTAMP(NANOS) restore as a file or a
+    directory: the footer probe lists the glob's matches instead of
+    reading the pattern as one file name."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_platform_nyc_taxi_spark.plans.daily_transactions import daily_transactions
+
+    for i, hours in enumerate([(8, 9), (10, 23)]):
+        pq.write_table(
+            pa.table(
+                {
+                    "pickup_datetime": pa.array(
+                        [dt.datetime(2024, 6, 1, h) for h in hours],
+                        type=pa.timestamp("ns"),
+                    )
+                }
+            ),
+            str(tmp_path / f"t_{i}.parquet"),
+        )
+    df = read_parquet_auto(spark, str(tmp_path / "t_*.parquet"))
+    assert isinstance(df.schema["pickup_datetime"].dataType, T.TimestampNTZType)
+    got = daily_transactions(df, "2024-06-01").collect()
+    assert [(r["transaction_date"], r["total_transactions"]) for r in got] == [
+        (dt.date(2024, 6, 1), 4)
+    ]
+
+
+def test_list_parquet_files_dir_file_glob_missing(tmp_path):
+    for name in ("b.parquet", "a.parquet", "notes.txt"):
+        (tmp_path / name).write_bytes(b"")
+    a, b = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
+    assert list_parquet_files(str(tmp_path)) == [a, b]  # sorted, .txt skipped
+    assert list_parquet_files(b) == [b]
+    assert list_parquet_files(str(tmp_path / "*.parquet")) == [a, b]
+    assert list_parquet_files(str(tmp_path / "missing")) == []
+
+
 def test_glob_scan_and_probe(spark, tmp_path):
     for m in ("2024-01", "2024-02"):
         spark.createDataFrame([(m,)], "m string").write.parquet(
             str(tmp_path / f"fhvhv_tripdata_{m}.parquet")
         )
-    files = list_parquet_files(str(tmp_path), "fhvhv_tripdata_*.parquet")
+    glob = str(tmp_path / "fhvhv_tripdata_*.parquet")
+    files = list_parquet_files(glob)
     assert len(files) == 2
-    schema = probe_schema(spark, files[0])
+    schema = read_parquet_auto(spark, files[0]).schema
     assert [f.name for f in schema.fields] == ["m"]
-    df = read_parquet_dir(spark, str(tmp_path), "fhvhv_tripdata_*.parquet")
-    assert df.count() == 2
+    assert read_parquet_auto(spark, glob).count() == 2
 
 
 def test_jdbc_sql_generation():
